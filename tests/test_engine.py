@@ -268,6 +268,69 @@ class TestCountVarz:
         assert 0 < lat["p50"] <= lat["p95"] <= lat["p999"]
         assert lat["hmean"] > 0
 
+    def test_varz_reports_every_declared_op(self, engine: Engine):
+        """Every op varz lists has a latency reservoir that fills."""
+        seq = engine.put_entry(Entry("c.t", b"x"), ts=T0)
+        engine.flush()
+        engine.get("c.t", now=T0 + 10)
+        engine.delete(seq)
+        lat = {k: v for k, v in engine.varz().items() if k.endswith("_latency")}
+        assert set(lat) == {"put_latency", "flush_latency", "get_latency", "del_latency"}
+        assert all(v["n"] == 1 and v["p50"] > 0 for v in lat.values())
+
+
+class TestGetJobs:
+    def test_get_with_tombstones_runs_two_jobs(self, engine: Engine):
+        """A Get on a store with tombstones runs the tombstone broadcast
+        and the fetch — no parquet schema-inference job over the
+        tombstone files (their schema is fixed)."""
+        sc = engine.spark.sparkContext
+        for i in range(6):
+            engine.put_entry(Entry("j.t", b"m%d" % i), ts=T0 + i)
+        engine.delete(2)
+        engine.delete(3)
+        assert engine.get("j.*", now=T0 + 10) == [b"m5", b"m4", b"m3", b"m0"]
+        group = "test-get-with-tombstones"
+        sc.setJobGroup(group, "one Engine.get")
+        try:
+            assert engine.get("j.*", now=T0 + 10) == [b"m5", b"m4", b"m3", b"m0"]
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        st = sc.statusTracker()
+        stages = [
+            st.getStageInfo(s).name
+            for j in st.getJobIdsForGroup(group)
+            for s in st.getJobInfo(j).stageIds
+        ]
+        assert len(st.getJobIdsForGroup(group)) == 2, stages
+        assert not [n for n in stages if n.startswith("parquet at")], stages
+
+
+class TestSqlLiteralTopics:
+    """Topic parts that need escaping in a Spark SQL string literal
+    reach the predicate intact: results equal the Python reference
+    matcher over everything stored."""
+
+    PARTS = ("it's", "back\\slash", "nl\\n", "tick`", 'dq"', "日本語", "café",
+             "bs\\'q", "bs'q", "bs\\\\'q", "'", "\\")
+
+    def test_get_and_get_many_match_reference(self, engine: Engine):
+        from unitdb_spark.core.topic import topic_match
+
+        stored = [f"odd.{p}" for p in self.PARTS] + ["odd.it's...", "odd.*.bs'q"]
+        for i, t in enumerate(stored):
+            engine.put_entry(Entry(t, t.encode()), ts=T0 + i)
+        queries = [f"odd.{p}" for p in self.PARTS]
+        queries += [f"*.{p}" for p in self.PARTS[:4]]
+        queries += ["odd.*", "odd...", "odd.it's.deeper", "odd.bs'q...", "it's"]
+        want = [
+            [t.encode() for t in reversed(stored) if topic_match(t, q)] for q in queries
+        ]
+        assert [engine.get(q, now=T0 + 100) for q in queries] == want
+        assert engine.get_many(queries, now=T0 + 100) == want
+        assert all(want[: len(self.PARTS)])  # every part found its own row
+
 
 class TestEncryption:
     """Payload value-codec parity (db.go:281-294; reference uses

@@ -124,6 +124,35 @@ class TestSubscribe:
         assert spark.sql("SELECT DISTINCT msg_id FROM sub_reliable").count() == 5
         assert spark.sql("SELECT * FROM sub_reliable").count() == 5
 
+    def test_escaped_literal_topics(self, spark, tmp_path):
+        """Topic parts that need escaping in a SQL string literal
+        (quote, backslash, backslash-n, backtick, double quote,
+        non-ASCII) deliver exactly what the reference matcher says."""
+        from unitdb_spark.core.topic import topic_match
+
+        parts = ("it's", "back\\slash", "nl\\n", "tick`", 'dq"', "日本語", "bs\\'q", "bs'q")
+        topics = [f"odd.{p}" for p in parts] + ["odd.it's..."]
+        src = str(tmp_path / "odd-src")
+        spark.createDataFrame(
+            [(t, t.encode(), i) for i, t in enumerate(topics)],
+            "topic string, payload binary, n long",
+        ).withColumn("ts", F.timestamp_seconds(F.lit(1700000000) + F.col("n"))).drop(
+            "n"
+        ).write.parquet(src)
+        stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
+        for i, query in enumerate(["odd.it's", "odd.bs\\'q", "*.nl\\n", "odd.*"]):
+            name = f"sub_odd_{i}"
+            q = (
+                subscribe(prepare_entries(stream), query)
+                .writeStream.format("memory")
+                .queryName(name)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination(120)
+            got = sorted(r[0] for r in spark.sql(f"SELECT topic FROM {name}").collect())
+            assert got == sorted(t for t in topics if topic_match(t, query)), query
+
 
 class TestFanout:
     def test_multiplexed_fanout(self, spark, events_dir):

@@ -124,14 +124,16 @@ class Entry:
     def with_payload(self, payload: bytes) -> "Entry":
         return replace(self, payload=payload)
 
-    def ttl_seconds(self) -> float | None:
-        # explicit builder TTL wins over the topic's ?ttl= option —
-        # same precedence rule as Query.last_seconds
+    def ttl_seconds(self, spec: TopicSpec | None = None) -> float | None:
+        """Resolved TTL; ``spec`` is this entry's already-parsed topic.
+
+        An explicit ``ttl`` (``with_ttl``) wins over the topic's ?ttl= option —
+        same precedence rule as Query.last_seconds."""
         if self.ttl is not None:
             if isinstance(self.ttl, (int, float)):
                 return float(self.ttl)
             return parse_duration(self.ttl)
-        return parse_topic(self.topic).ttl_seconds
+        return (spec or parse_topic(self.topic)).ttl_seconds
 
 
 def new_entry(topic: str, payload: bytes = b"") -> Entry:

@@ -47,8 +47,12 @@ from unitdb_spark.core.model import (
     message_id,
     new_contract,
 )
-from unitdb_spark.core.topic import parse_topic
+from unitdb_spark.core.topic import TopicSpec, parse_topic
 from unitdb_spark.table import MESSAGES_SCHEMA, MessagesTable, ttl_live_expr
+
+#: the tombstone table: one deleted seq per row. Readers pass it
+#: explicitly so a Get never runs a schema-inference job over the files.
+TOMBSTONE_SCHEMA = "seq long"
 
 
 class ImmutableError(RuntimeError):
@@ -102,7 +106,7 @@ class Engine:
         self._metrics: dict[str, int] = {"puts": 0, "gets": 0, "dels": 0}
         # per-op latency reservoirs (meter.go:100-115: 50-sample window)
         self._latencies: dict[str, deque] = {
-            op: deque(maxlen=50) for op in ("get", "put", "del")
+            op: deque(maxlen=50) for op in ("get", "put", "del", "flush")
         }
         # finish any crashed compact() swap BEFORE first read: a crash
         # between its renames leaves a partition absent from the table
@@ -145,17 +149,21 @@ class Engine:
             return self.options.encrypt_all
         return self.options.encryption_key is not None
 
-    def _validate_entry(self, entry: Entry) -> None:
+    def _validate_entry(self, entry: Entry) -> TopicSpec:
         """Write-path validation (db.go:351-360) — shared by the direct
         put path and Batch staging so errors surface BEFORE anything is
-        buffered or persisted."""
-        parse_topic(entry.topic)
+        buffered or persisted. Returns the parsed topic, so the row is
+        built without parsing it again."""
+        spec = parse_topic(entry.topic)
         if len(entry.payload) > MAX_PAYLOAD_BYTES:
             raise ValueError("payload exceeds 1GB")
         if entry.encryption and self.options.encryption_key is None:
             raise ValueError("Entry.encryption requires a store encryption_key")
+        return spec
 
-    def _make_row(self, entry: Entry, ts: float | None = None) -> tuple[int, Row]:
+    def _make_row(
+        self, entry: Entry, spec: TopicSpec, ts: float | None = None
+    ) -> tuple[int, Row]:
         """Seq assignment + full row construction for one entry.
 
         A caller-supplied msg_id (NewID + WithID flow, entry.go:61-66)
@@ -163,9 +171,8 @@ class Engine:
         delete_entry would tombstone a seq no row carries."""
         from unitdb_spark.core.model import message_id_seq
 
-        spec = parse_topic(entry.topic)
         now = ts if ts is not None else time.time()
-        ttl = entry.ttl_seconds()
+        ttl = entry.ttl_seconds(spec)
         if entry.msg_id is not None:
             seq = message_id_seq(entry.msg_id)
             self._seq.advance_to(seq)
@@ -189,12 +196,14 @@ class Engine:
 
     def put_entry(self, entry: Entry, ts: float | None = None) -> int:
         """db.go:343-387 PutEntry(): validated, TTL-resolved append."""
-        self._validate_entry(entry)
-        seq, row = self._make_row(entry, ts)
+        t0 = time.monotonic()
+        spec = self._validate_entry(entry)
+        seq, row = self._make_row(entry, spec, ts)
         self._buffer.append(row)
         self._metrics["puts"] += 1
         if len(self._buffer) >= self.options.flush_every:
             self.flush()
+        self._latencies["put"].append(time.monotonic() - t0)
         return seq
 
     def put_df(self, df: DataFrame) -> None:
@@ -225,9 +234,11 @@ class Engine:
         memdb/tiny_log.go:202-301): one atomic append per flush."""
         if not self._buffer:
             return
+        t0 = time.monotonic()
         df = self.spark.createDataFrame(self._buffer, MESSAGES_SCHEMA)
         self.table.append(self._encrypt(df))
         self._buffer.clear()
+        self._latencies["flush"].append(time.monotonic() - t0)
 
     def _encrypt(self, df: DataFrame) -> DataFrame:
         """Value-codec parity (db.go:281-294, chacha20-poly1305 there,
@@ -355,10 +366,12 @@ class Engine:
         """db.go:389-425 Delete(): tombstone by sequence."""
         if self.options.immutable:
             raise ImmutableError("delete forbidden: store is immutable")
+        t0 = time.monotonic()
         self._metrics["dels"] += 1
-        self.spark.createDataFrame([(int(seq),)], "seq long").write.mode("append").parquet(
-            self.tombstones_path
-        )
+        self.spark.createDataFrame([(int(seq),)], TOMBSTONE_SCHEMA).write.mode(
+            "append"
+        ).parquet(self.tombstones_path)
+        self._latencies["del"].append(time.monotonic() - t0)
 
     def delete_entry(self, entry: Entry) -> None:
         if entry.msg_id is None:
@@ -369,7 +382,7 @@ class Engine:
 
     def _tombstones_df(self) -> DataFrame | None:
         if fs.has_files(self.spark, self.tombstones_path):
-            return self.spark.read.parquet(self.tombstones_path)
+            return self.spark.read.schema(TOMBSTONE_SCHEMA).parquet(self.tombstones_path)
         return None
 
     # ------------------------------------------------------------ batch
@@ -517,7 +530,7 @@ class Engine:
             ]
             if not snap_files:
                 return report
-            tombs = self.spark.read.parquet(*snap_files)
+            tombs = self.spark.read.schema(TOMBSTONE_SCHEMA).parquet(*snap_files)
             tomb_seqs_df = tombs.select("seq").distinct()
             # affected-partition discovery is a JOIN, not a driver-side
             # intersect: a mass delete (GDPR-style) may tombstone
@@ -776,7 +789,7 @@ class Batch:
 
     def __init__(self, engine: Engine) -> None:
         self.engine = engine
-        self._entries: list[tuple[Entry, float | None]] = []
+        self._entries: list[tuple[Entry, TopicSpec, float | None]] = []
         self._deletes: list[int] = []
         self._default_contract: int | None = None
         self._committed = False
@@ -792,8 +805,7 @@ class Batch:
     def put_entry(self, entry: Entry, ts: float | None = None) -> None:
         # validate eagerly (topic AND payload) so a bad entry fails at
         # staging time, before anything could persist — abort-safe
-        self.engine._validate_entry(entry)
-        self._entries.append((entry, ts))
+        self._entries.append((entry, self.engine._validate_entry(entry), ts))
 
     def delete(self, seq: int) -> None:
         """batch.go:108 Delete(): tombstone staged until commit."""
@@ -828,10 +840,10 @@ class Batch:
         if self._deletes:
             eng._metrics["dels"] += len(self._deletes)
             eng.spark.createDataFrame(
-                [(s,) for s in self._deletes], "seq long"
+                [(s,) for s in self._deletes], TOMBSTONE_SCHEMA
             ).coalesce(1).write.mode("append").parquet(eng.tombstones_path)
         if self._entries:
-            rows = [eng._make_row(entry, ts)[1] for entry, ts in self._entries]
+            rows = [eng._make_row(*staged)[1] for staged in self._entries]
             df = eng.spark.createDataFrame(rows, MESSAGES_SCHEMA)
             eng.table.append(eng._encrypt(df))
             eng._metrics["puts"] += len(rows)

@@ -5,6 +5,12 @@ Shared by Engine.get_df (live store) and the correctness harness
 ?last cutoff → TTL filter → newest-first top-K (reference:
 db.go:222-319, query.go:50-123).
 
+The contract filter and the topic match are one Spark SQL predicate,
+compiled to text by ``operators.topic_match`` and parsed with a single
+``F.expr`` — planning a Get costs a handful of Python→JVM round trips
+instead of one per expression node; ``apply_get_many`` builds each
+per-query condition with the same compiler.
+
 The emitted plan is: Parquet scan with pushed filters (contract is a
 partition column on the live store; ts/seq hit row-group stats) →
 whole-stage-codegen filter → TakeOrderedAndProject(limit, seq DESC).
@@ -41,8 +47,7 @@ def apply_get(
     """Apply Get semantics to a messages-schema DataFrame."""
     q = Query(topic=query) if isinstance(query, str) else query
     now_ts = now_column(now)
-    out = df.filter(F.col("contract") == F.lit(q.contract))
-    out = out.filter(topic_match_expr(q.spec, symmetric=symmetric))
+    out = df.filter(topic_match_expr(q.spec, symmetric=symmetric, contract=q.contract))
     last = q.last_seconds()
     if last is not None:
         # fractional-second windows stay exact (INTERVAL accepts them);
@@ -78,9 +83,7 @@ def apply_get_many(
     base = df.filter(ttl_live_expr(now_ts))
     per_query: list[Column] = []
     for q in qs:
-        cond = (F.col("contract") == F.lit(q.contract)) & topic_match_expr(
-            q.spec, symmetric=symmetric
-        )
+        cond = topic_match_expr(q.spec, symmetric=symmetric, contract=q.contract)
         last = q.last_seconds()
         if last is not None:
             cond = cond & (

@@ -1,27 +1,36 @@
-"""Spark Column expressions for (symmetric) wildcard topic matching.
+"""Spark SQL predicates for (symmetric) wildcard topic matching.
 
 The reference resolves wildcard matches with an in-RAM trie traversal
 (reference: trie.go:156-188, message/topic.go:231-296). In Spark the
 equivalent is a *predicate expression* over the stored ``topic`` /
-``parts`` / ``depth`` / ``has_tail`` columns, generated driver-side
-from the (known) query pattern, so that:
+``parts`` / ``depth`` / ``has_tail`` / ``is_pattern`` columns, generated
+in Python from the (known) query pattern, so that:
 
 - static-topic queries collapse to ``topic = 'a.b.c'`` — a plain
   equality Catalyst pushes into the Parquet scan;
-- wildcard queries become conjunctions of ``element_at`` equalities and
-  a ``size()`` check — still JVM-side, whole-stage-codegen friendly,
+- wildcard queries become conjunctions of ``get(parts, i)`` equalities
+  and a depth check — still JVM-side, whole-stage-codegen friendly,
   with NO Python UDF in the hot path;
 - stored-side patterns (wildcards are legal on write,
   db_test.go:296-317) are matched with the symmetric direction OR-ed
   in.
 
+The predicate is emitted as ONE Spark SQL string and parsed with a
+single ``F.expr``: building it node by node from ``F.col``/``F.lit``
+costs one Python→JVM round trip per node (~800 for a depth-3 wildcard
+query), parsing it costs three. String literals are escaped for Spark's parser
+(backslash first, then the quote).
+
 Column layout expected on the messages table (SURVEY §1.3):
-``topic STRING, parts ARRAY<STRING>, depth INT, has_tail BOOLEAN``
-where ``parts`` contains wildcard tokens verbatim and ``has_tail``
-marks a trailing '...'. ``depth = size(parts)`` (tail token excluded).
+``topic STRING, parts ARRAY<STRING>, depth INT, has_tail BOOLEAN,
+is_pattern BOOLEAN`` where ``parts`` contains wildcard tokens verbatim
+and ``has_tail`` marks a trailing '...'. ``depth = size(parts)`` (tail
+token excluded).
 """
 
 from __future__ import annotations
+
+import itertools
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -35,167 +44,104 @@ from unitdb_spark.core.topic import (
 )
 
 
-def _query_pattern_vs_stored(spec: TopicSpec, parts: Column, depth: Column, has_tail: Column, topic: Column) -> Column:
-    """Query pattern (driver-side constant) matched against the stored
-    topic *treated as concrete* — where a stored trailing '...' counts
-    as one literal level, exactly like the Python reference matcher
-    (core.topic._pattern_matches: the concrete side keeps its wildcard
-    tokens as literals). Generated as a plain conjunction.
-    """
-    if spec.kind == TopicKind.STATIC:
-        # Fast path: plain string equality — partition/predicate prunable.
-        return topic == F.lit(spec.raw)
-    qp = list(spec.parts)  # INCLUDES a trailing '...' token if present
-    # effective stored token count: parts plus the tail token
-    length = depth + has_tail.cast("int")
+def _lit(s: str) -> str:
+    """``s`` as a Spark SQL string literal."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
-    def stored_tok(i: int) -> Column:
-        return F.when(F.lit(i) < depth, F.get(parts, i)).otherwise(
-            F.lit(WILDCARD_TAIL)
-        )
 
-    if qp and qp[-1] == WILDCARD_TAIL:
-        base = qp[:-1]
-        conds: list[Column] = [length >= F.lit(len(base))]
-    else:
-        base = qp
-        conds = [length == F.lit(len(base))]
-    for i, p in enumerate(base):
-        if p != WILDCARD_ONE:
-            conds.append(stored_tok(i) == F.lit(p))
+def _all(conds: list[str]) -> str:
+    """Left-nested conjunction: the SQL parser would balance a flat
+    ``a AND b AND c`` chain, while ``&``-chained Columns nest to the
+    left; nesting explicitly gives Catalyst that same tree."""
     out = conds[0]
     for c in conds[1:]:
-        out = out & c
+        out = f"({out} AND {c})"
     return out
 
 
-def _stored_pattern_vs_query(
-    spec: TopicSpec,
-    parts: Column,
-    depth: Column,
-    has_tail: Column,
-    is_pattern: Column | None = None,
-) -> Column:
-    """Stored patterns (rows written to wildcard topics) matched against
-    the query *treated as concrete* — the query's own wildcard/tail
-    tokens count as literal levels, mirroring the Python reference
-    matcher's symmetric formulation.
+def _match_sql(spec: TopicSpec, symmetric: bool) -> str:
+    """The match predicate for one query topic, as Spark SQL text.
 
-    When ``is_pattern`` is given, the whole branch is guarded by it —
-    Parquet then receives the pushable `Or(topic = x, is_pattern)`
-    residual and prunes pattern-free row groups on stats.
+    Forward direction: the query pattern against the stored topic
+    *treated as concrete*, where a stored trailing '...' counts as one
+    literal level, exactly like the Python reference matcher
+    (core.topic._pattern_matches). Reverse direction (``symmetric``):
+    stored patterns against the query treated as concrete, guarded by
+    ``is_pattern`` so Parquet receives the pushable
+    ``Or(topic = x, is_pattern)`` residual and prunes pattern-free row
+    groups on stats.
+
+    A *necessary* (weaker) ``coarse`` condition built only from pushable
+    predicates (string equality / StartsWith) is AND-ed onto the exact
+    match as a redundant conjunct. Catalyst can't derive it from the OR
+    of array conditions itself, but given explicitly it reaches the
+    Parquet scan and prunes row groups holding neither the topic prefix
+    nor any stored patterns.
     """
-    qparts = list(spec.parts)  # INCLUDES a trailing '...' token if present
-    qd = len(qparts)
-    # stored has trailing '...': base must be a (wildcard-tolerant) prefix
-    tail_conds: Column = has_tail & (depth <= F.lit(qd))
-    for i, qp in enumerate(qparts):
-        pos_ok = (depth < F.lit(i + 1)) | (
-            (F.get(parts, i) == F.lit(qp)) | (F.get(parts, i) == F.lit(WILDCARD_ONE))
-        )
-        tail_conds = tail_conds & pos_ok
-    # stored flat pattern: same depth, each part equal or '*'
-    flat_conds: Column = (~has_tail) & (depth == F.lit(qd))
-    for i, qp in enumerate(qparts):
-        flat_conds = flat_conds & (
-            (F.get(parts, i) == F.lit(qp)) | (F.get(parts, i) == F.lit(WILDCARD_ONE))
-        )
-    out = tail_conds | flat_conds
-    if is_pattern is not None:
-        out = is_pattern & out
-    return out
-
-
-def topic_match_expr(
-    query_topic: str | TopicSpec,
-    topic: Column | str = "topic",
-    parts: Column | str = "parts",
-    depth: Column | str = "depth",
-    has_tail: Column | str = "has_tail",
-    is_pattern: Column | str | None = "is_pattern",
-    symmetric: bool = True,
-) -> Column:
-    """Build the match predicate for one query topic.
-
-    ``symmetric=True`` reproduces the reference's both-direction match
-    (stored pattern OR query pattern — db_test.go:296-317). Set it
-    False when the table is known to hold only concrete topics: the
-    resulting predicate is then a pure conjunction that Catalyst can
-    push down fully.
-    """
-    spec = parse_topic(query_topic) if isinstance(query_topic, str) else query_topic
-    topic_c = F.col(topic) if isinstance(topic, str) else topic
-    parts_c = F.col(parts) if isinstance(parts, str) else parts
-    depth_c = F.col(depth) if isinstance(depth, str) else depth
-    tail_c = F.col(has_tail) if isinstance(has_tail, str) else has_tail
-    pat_c = F.col(is_pattern) if isinstance(is_pattern, str) else is_pattern
-
-    fwd = _query_pattern_vs_stored(spec, parts_c, depth_c, tail_c, topic_c)
     if spec.kind == TopicKind.STATIC:
+        fwd = f"topic = {_lit(spec.raw)}"
         if not symmetric:
-            return topic_c == F.lit(spec.raw)
-        rev = _stored_pattern_vs_query(spec, parts_c, depth_c, tail_c, pat_c)
-        out = (topic_c == F.lit(spec.raw)) | rev
-    elif not symmetric:
-        out = fwd
-    else:
-        rev = _stored_pattern_vs_query(spec, parts_c, depth_c, tail_c, pat_c)
-        out = fwd | rev
-    coarse = _coarse_pushdown(spec, topic_c, pat_c if symmetric else None)
-    return out & coarse if coarse is not None else out
-
-
-def _coarse_pushdown(
-    spec: TopicSpec, topic: Column, is_pattern: Column | None
-) -> Column | None:
-    """A *necessary* (weaker) condition built only from pushable
-    predicates (string equality / StartsWith / boolean), AND-ed onto the
-    exact match as a redundant conjunct. Catalyst can't derive it from
-    the OR of array conditions itself, but given explicitly it reaches
-    the Parquet scan and prunes row groups holding neither the topic
-    prefix nor any stored patterns."""
-    if spec.kind == TopicKind.STATIC:
+            return fwd
         # StartsWith, not equality: a plain `topic = x` here would be a
         # common factor with the exact branch and Catalyst's boolean
         # simplification would refactor `(x|rev)&(x|pat)` back into
         # `x|(rev&pat)`, dropping the pushable conjunct. The strict
         # superset survives optimization and still prunes row groups.
-        cond = topic.startswith(F.lit(spec.raw))
+        coarse = f"startswith(topic, {_lit(spec.raw)})"
     else:
+        base = spec.base_parts
+        conds = [
+            f"depth + CAST(has_tail AS INT) {'>=' if spec.has_tail else '='} {len(base)}"
+        ]
+        conds += [
+            f"CASE WHEN {i} < depth THEN get(parts, {i}) ELSE '{WILDCARD_TAIL}' END = {_lit(p)}"
+            for i, p in enumerate(base)
+            if p != WILDCARD_ONE
+        ]
+        fwd = _all(conds)
         # concrete prefix before the first wildcard token
-        prefix_parts = []
-        for p in spec.base_parts:
-            if p == WILDCARD_ONE:
-                break
-            prefix_parts.append(p)
-        if not prefix_parts:
-            return None  # bare '*' / '...' — nothing pushable
-        prefix = ".".join(prefix_parts)
-        if len(prefix_parts) == len(spec.base_parts) and spec.has_tail:
+        prefix = list(itertools.takewhile(lambda p: p != WILDCARD_ONE, base))
+        under = f"startswith(topic, {_lit('.'.join(prefix) + '.')})"
+        if not prefix:
+            coarse = None  # bare '*' / '...' — nothing pushable
+        elif len(prefix) == len(base) and spec.has_tail:
             # 'a.b...' -> exactly 'a.b' or anything under 'a.b.'
-            cond = (topic == F.lit(prefix)) | topic.startswith(F.lit(prefix + "."))
+            coarse = f"(topic = {_lit('.'.join(prefix))} OR {under})"
         else:
-            cond = topic.startswith(F.lit(prefix + "."))
-    if is_pattern is not None:
-        cond = cond | is_pattern
-    return cond
+            coarse = under
+    if symmetric:
+        qd = len(spec.parts)  # the query's own '...' counts as a level
+        eq = [
+            f"(get(parts, {i}) = {_lit(p)} OR get(parts, {i}) = '{WILDCARD_ONE}')"
+            for i, p in enumerate(spec.parts)
+        ]
+        # stored has trailing '...': base must be a (wildcard-tolerant) prefix
+        tail = ["has_tail", f"depth <= {qd}"]
+        tail += [f"(depth < {i + 1} OR {c})" for i, c in enumerate(eq)]
+        # stored flat pattern: same depth, each part equal or '*'
+        flat = ["(NOT has_tail)", f"depth = {qd}", *eq]
+        rev = f"(is_pattern AND ({_all(tail)} OR {_all(flat)}))"
+        fwd = f"({fwd} OR {rev})"
+        if coarse is not None:
+            coarse = f"({coarse} OR is_pattern)"
+    return fwd if coarse is None else f"({fwd} AND {coarse})"
 
 
-def topic_regex(query_topic: str | TopicSpec) -> str:
-    """Anchored regex equivalent of a query pattern vs concrete topics.
+def topic_match_expr(
+    query_topic: str | TopicSpec,
+    symmetric: bool = True,
+    contract: int | None = None,
+) -> Column:
+    """Build the match predicate for one query topic as one Column.
 
-    Used by the DuckDB oracle SQL (and available as an alternative
-    matcher via ``rlike``): '*' -> one level, trailing '...' -> any tail.
+    ``symmetric=True`` reproduces the reference's both-direction match
+    (stored pattern OR query pattern — db_test.go:296-317). Set it
+    False when the table is known to hold only concrete topics: the
+    resulting predicate is then a pure conjunction that Catalyst can
+    push down fully. A ``contract`` is AND-ed in front of the match.
     """
     spec = parse_topic(query_topic) if isinstance(query_topic, str) else query_topic
-    import re as _re
-
-    out = []
-    for p in spec.base_parts:
-        out.append(r"[^.]+" if p == WILDCARD_ONE else _re.escape(p))
-    body = r"\.".join(out)
-    if spec.has_tail:
-        if not spec.base_parts:
-            return r"^.*$"
-        return rf"^{body}(\..+)?$"
-    return rf"^{body}$"
+    sql = _match_sql(spec, symmetric)
+    if contract is not None:
+        sql = f"contract = {int(contract)} AND ({sql})"
+    return F.expr(sql)

@@ -163,9 +163,7 @@ def subscribe(
     sink (memory/kafka/foreachBatch) and trigger per delivery mode.
     """
     spec = parse_topic(topic)
-    out = stream.filter(F.col("contract") == F.lit(contract)).filter(
-        topic_match_expr(spec)
-    )
+    out = stream.filter(topic_match_expr(spec, contract=contract))
     if mode == DeliveryMode.RELIABLE:
         # exactly-once-ish: drop redelivered messages within the
         # watermark horizon (NOTIFY/RECEIPT ledger parity,
