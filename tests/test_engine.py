@@ -313,7 +313,8 @@ class TestSqlLiteralTopics:
     matcher over everything stored."""
 
     PARTS = ("it's", "back\\slash", "nl\\n", "tick`", 'dq"', "日本語", "café",
-             "bs\\'q", "bs'q", "bs\\\\'q", "'", "\\")
+             "bs\\'q", "bs'q", "bs\\\\'q", "'", "\\", "${x}", "${spark.app.name}",
+             "${env:HOME}", "\\${x}", "$${x}}")
 
     def test_get_and_get_many_match_reference(self, engine: Engine):
         from unitdb_spark.core.topic import topic_match

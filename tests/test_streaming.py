@@ -127,10 +127,12 @@ class TestSubscribe:
     def test_escaped_literal_topics(self, spark, tmp_path):
         """Topic parts that need escaping in a SQL string literal
         (quote, backslash, backslash-n, backtick, double quote,
-        non-ASCII) deliver exactly what the reference matcher says."""
+        non-ASCII, ``${...}``) deliver exactly what the reference
+        matcher says."""
         from unitdb_spark.core.topic import topic_match
 
-        parts = ("it's", "back\\slash", "nl\\n", "tick`", 'dq"', "日本語", "bs\\'q", "bs'q")
+        parts = ("it's", "back\\slash", "nl\\n", "tick`", 'dq"', "日本語", "bs\\'q", "bs'q",
+                 "${x}", "${spark.app.name}", "${env:HOME}")
         topics = [f"odd.{p}" for p in parts] + ["odd.it's..."]
         src = str(tmp_path / "odd-src")
         spark.createDataFrame(
@@ -140,7 +142,9 @@ class TestSubscribe:
             "n"
         ).write.parquet(src)
         stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
-        for i, query in enumerate(["odd.it's", "odd.bs\\'q", "*.nl\\n", "odd.*"]):
+        queries = ["odd.it's", "odd.bs\\'q", "*.nl\\n", "odd.*", "odd.${x}",
+                   "odd.${spark.app.name}", "*.${env:HOME}"]
+        for i, query in enumerate(queries):
             name = f"sub_odd_{i}"
             q = (
                 subscribe(prepare_entries(stream), query)

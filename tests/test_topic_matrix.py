@@ -143,7 +143,7 @@ class TestRandomizedPatternMatch:
     The model deliberately re-derives the semantics from scratch —
     it shares no code with core.topic — so a shared bug can't hide."""
 
-    TOKENS = ("a", "b", "c", "dev", "x9", "*", "'", "\\")
+    TOKENS = ("a", "b", "c", "dev", "x9", "*", "'", "\\", "${x}")
 
     @staticmethod
     def _tokens(p: str) -> list[str]:

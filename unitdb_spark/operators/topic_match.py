@@ -19,7 +19,9 @@ The predicate is emitted as ONE Spark SQL string and parsed with a
 single ``F.expr``: building it node by node from ``F.col``/``F.lit``
 costs one Python→JVM round trip per node (~800 for a depth-3 wildcard
 query), parsing it costs three. String literals are escaped for Spark's parser
-(backslash first, then the quote).
+(backslash first, then the quote), and ``$`` is written as ``\\u0024`` so the
+parser's ``${...}`` variable substitution, which runs on the raw text
+before literals are read, never sees a ``${`` in a topic.
 
 Column layout expected on the messages table (SURVEY §1.3):
 ``topic STRING, parts ARRAY<STRING>, depth INT, has_tail BOOLEAN,
@@ -46,7 +48,8 @@ from unitdb_spark.core.topic import (
 
 def _lit(s: str) -> str:
     """``s`` as a Spark SQL string literal."""
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    s = s.replace("\\", "\\\\").replace("'", "\\'").replace("$", "\\u0024")
+    return "'" + s + "'"
 
 
 def _all(conds: list[str]) -> str:
